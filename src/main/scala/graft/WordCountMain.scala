@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.HashFunctions
 import graft.operators.WordCount
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** CLI-parity entry point: the reference's whole job
@@ -22,22 +22,27 @@ object WordCountMain {
     val inputs = args(0).split(",").toSeq
     val outDir = args(1)
     val nReduce = args.lift(2).map(_.toInt).getOrElse(5)
-    // reuse a live session (tests / notebooks) and leave it running;
-    // stop only a session this main itself created
-    val preexisting = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession).isDefined
-    val spark = GraftSession.build(
+    // reuse a live session (tests / notebooks) as it is, and leave it
+    // running; size and stop only a session this main itself created
+    val live = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    val spark = live.getOrElse(GraftSession.build(
       sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"),
-      math.max(nReduce, 8), "graft-wordcount")
-    val wc = WordCount.wordCountText(spark.read.text(inputs: _*))
-      .withColumn("bucket", HashFunctions.referencePartition(col("word"), nReduce))
-    wc.repartition(nReduce, col("bucket"))
-      .sortWithinPartitions("word")
-      .select(concat_ws("\t", col("word"), col("cnt")).as("value"), col("bucket"))
+      math.max(nReduce, 8), "graft-wordcount"))
+    buckets(spark, inputs, nReduce)
       .write.mode("overwrite")
       .partitionBy("bucket")
       .text(outDir)
     println(s"wordcount: inputs=${inputs.size} nReduce=$nReduce out=$outDir")
-    if (!preexisting) spark.stop()
+    if (live.isEmpty) spark.stop()
   }
+
+  /** The job's output rows, `word<TAB>count` per bucket, before the
+    * write. Unordered counts feed the bucket shuffle, which would throw
+    * a global order away; each bucket is sorted by word on its own. */
+  def buckets(spark: SparkSession, inputs: Seq[String], nReduce: Int): DataFrame =
+    WordCount.counts(spark.read.text(inputs: _*), "value")
+      .withColumn("bucket", HashFunctions.referencePartition(col("word"), nReduce))
+      .repartition(nReduce, col("bucket"))
+      .sortWithinPartitions("word")
+      .select(concat_ws("\t", col("word"), col("cnt")).as("value"), col("bucket"))
 }

@@ -1,5 +1,7 @@
 package graft.functions
 
+import com.ibm.icu.lang.UCharacter
+import com.ibm.icu.util.ULocale
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -26,6 +28,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * UTF-8 input.
   */
 object TextFunctions {
+
+  /** `array(string)` of the reference word-count tokens, in text order:
+    * whitespace tokens with runs of `.,!?"':;()` trimmed from both
+    * ends, lowercased, empties dropped — see [[WordTokens]]. */
+  def wordTokens(c: Column): Column =
+    ColumnBridge.column(WordTokens(ColumnBridge.expression(c)))
 
   /** `array(long)`: element 0 is the total token count; element i+1 is the
     * number of tokens contained in `sets(i)`. One pass for what was
@@ -117,6 +125,94 @@ private[functions] object Tokenize {
       while (i < n && !isSpace(bytes(i))) i += 1
       if (i > start) f(start, i)
     }
+  }
+}
+
+/** See [[TextFunctions.wordTokens]]. The word-count tokenizer of the
+  * reference (`wordcount.go:10-22`: `strings.Fields`, `strings.Trim` of
+  * the cutset, lowercase, drop empty) in one byte scan, replacing a
+  * regex split plus a regex replace and a `lower` per token.
+  *
+  * The trim follows Go's `strings.Trim` (and the oracle's RE2 `$`): a
+  * token ends where its bytes end. Java's `$` also matches before a
+  * final U+0085, U+2028 or U+2029, so the regex form stripped the `.`
+  * from `end.` followed by U+2028; this kernel keeps it. Lowercasing is
+  * [[WordTokens.lower]]. */
+case class WordTokens(child: Expression)
+    extends UnaryExpression with CodegenFallback {
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def prettyName: String = "graft_word_tokens"
+
+  override protected def nullSafeEval(v: Any): Any = {
+    val bytes = v.asInstanceOf[UTF8String].getBytes
+    val out = new scala.collection.mutable.ArrayBuffer[Any](bytes.length / 8 + 1)
+    val words = new WordTokens.Scanner(bytes)
+    while (words.next()) out += WordTokens.lower(bytes, words.start, words.end)
+    new GenericArrayData(out.toArray)
+  }
+  override protected def withNewChildInternal(c: Expression): WordTokens =
+    copy(child = c)
+}
+
+/** The scanner behind [[WordTokens]], shared with
+  * [[graft.mr.WordCountMapper]] so the two word-count paths cannot
+  * drift apart. Every byte it tests is ASCII, so scanning is exact on
+  * UTF-8 input. */
+object WordTokens {
+  @inline private def isCut(b: Byte): Boolean = b match {
+    case '.' | ',' | '!' | '?' | '"' | '\'' | ':' | ';' | '(' | ')' => true
+    case _ => false
+  }
+
+  /** Cursor over the words of `bytes`: each whitespace token (the `\s`
+    * contract of [[Tokenize]]) with cutset runs trimmed from both ends;
+    * tokens that trim to nothing are skipped. A cursor, not a callback,
+    * so the mapper can hand out its words lazily. */
+  final class Scanner(bytes: Array[Byte]) {
+    private var i = 0
+    /** The current word is `bytes[start, end)`. */
+    var start = 0
+    var end = 0
+
+    /** Advances to the next word; false when there is none. */
+    def next(): Boolean = {
+      val n = bytes.length
+      while (i < n) {
+        while (i < n && Tokenize.isSpace(bytes(i))) i += 1
+        var s = i
+        while (i < n && !Tokenize.isSpace(bytes(i))) i += 1
+        var e = i
+        while (s < e && isCut(bytes(s))) s += 1
+        while (e > s && isCut(bytes(e - 1))) e -= 1
+        if (e > s) { start = s; end = e; return true }
+      }
+      false
+    }
+  }
+
+  /** The token `bytes[s, e)` lowercased. A lowercase ASCII token is
+    * returned as a view of `bytes`; other ASCII tokens are lowered byte
+    * by byte; any other token goes through the ICU case mapping
+    * Spark's `lower` applies (`spark.sql.icu.caseMappings.enabled`,
+    * on by default), pinned to the root locale so that no result
+    * depends on the JVM's default locale. Java's
+    * `String.toLowerCase(Locale.ROOT)` is not used: it places the
+    * final sigma differently (`QΣ"` lowers to `qσ"`, ICU and Spark give
+    * `qς"`). */
+  def lower(bytes: Array[Byte], s: Int, e: Int): UTF8String = {
+    var i = s
+    while (i < e && bytes(i) >= 0 && (bytes(i) < 'A' || bytes(i) > 'Z')) i += 1
+    if (i == e) return UTF8String.fromBytes(bytes, s, e - s)
+    val out = new Array[Byte](e - s)
+    System.arraycopy(bytes, s, out, 0, i - s)
+    while (i < e) {
+      val b = bytes(i)
+      if (b < 0) return UTF8String.fromString(UCharacter.toLowerCase(ULocale.ROOT,
+        UTF8String.fromBytes(bytes, s, e - s).toValidString))
+      out(i - s) = if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
+      i += 1
+    }
+    UTF8String.fromBytes(out)
   }
 }
 

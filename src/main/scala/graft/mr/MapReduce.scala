@@ -1,5 +1,8 @@
 package graft.mr
 
+import java.nio.charset.StandardCharsets
+
+import graft.functions.WordTokens
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 
@@ -37,14 +40,24 @@ trait Reducer[B] extends Serializable {
 
 /** The reference's built-in app, reimplemented on the typed surface.
   * Tokenization semantics pinned by `wordcount.go:15`
-  * (fields + trim runs of `.,!?"':;()` + lowercase + drop empty). */
+  * (fields + trim runs of `.,!?"':;()` + lowercase + drop empty), from
+  * the byte scanner and lowercasing of the `WordTokens` kernel, which
+  * pin the root locale: the output never depends on the executor's. */
 object WordCountMapper extends Mapper {
-  private val cutset = ".,!?\"':;()".toSet
-  def map(name: String, contents: String): Iterator[(String, String)] =
-    contents.split("\\s+").iterator
-      .map(w => w.dropWhile(cutset).reverse.dropWhile(cutset).reverse.toLowerCase)
-      .filter(_.nonEmpty)
-      .map(w => (w, "1"))
+  def map(name: String, contents: String): Iterator[(String, String)] = {
+    val bytes = contents.getBytes(StandardCharsets.UTF_8)
+    val words = new WordTokens.Scanner(bytes)
+    new Iterator[(String, String)] {
+      private var ready = words.next()
+      def hasNext: Boolean = ready
+      def next(): (String, String) = {
+        if (!ready) throw new NoSuchElementException
+        val w = WordTokens.lower(bytes, words.start, words.end).toString
+        ready = words.next()
+        (w, "1")
+      }
+    }
+  }
 }
 
 /** Counting reducer: values are ignored, the count is emitted —
@@ -118,14 +131,18 @@ object MapReduce {
 
   /** Text-file front door matching the reference CLI (`main.go:25,130`):
     * each file becomes one (path, contents) document, then map/reduce.
+    * The reference runs one map task per file; here `minPartitions`
+    * asks for a split per file and per core, where `wholeTextFiles`'s
+    * default of 2 would cap the map side at 2 tasks for any input.
     * At scale prefer line-oriented `spark.read.text` — wholeTextFiles is
     * only for exact whole-file Map semantics parity. */
   def runOnFiles[B: scala.reflect.ClassTag](
       spark: SparkSession, paths: Seq[String],
       mapper: Mapper, reducer: Reducer[B]): DataFrame = {
     import spark.implicits._
-    val docs = spark.sparkContext
-      .wholeTextFiles(paths.mkString(",")).toDS()
+    val sc = spark.sparkContext
+    val docs = sc.wholeTextFiles(paths.mkString(","),
+      minPartitions = math.max(sc.defaultParallelism, paths.size)).toDS()
     run(spark, docs, mapper, reducer)
   }
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.HashFunctions
+import graft.functions.{HashFunctions, TextFunctions}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,15 +21,12 @@ object Skew {
 
   def saltedWordCount(s: SparkSession, dir: String, buckets: Int = 8): DataFrame = {
     import s.implicits._
-    // Deterministic row-level salt (hash of doc_id × token position):
+    // Deterministic row-level salt (hash of doc_id × word position):
     // spreads a hot key over `buckets` reducers without the plan
     // penalties of nondeterministic spark_partition_id.
     val toks = Tables.documents(s, dir)
-      .select($"doc_id", posexplode(split($"text", "\\s+")).as(Seq("pos", "raw")))
-      .select(
-        lower(regexp_replace($"raw", WordCount.TrimPattern, "")).as("word"),
-        pmod(xxhash64($"doc_id", $"pos"), lit(buckets)).as("salt"))
-      .filter($"word" =!= "")
+      .select($"doc_id", posexplode(TextFunctions.wordTokens($"text")).as(Seq("pos", "word")))
+      .select($"word", pmod(xxhash64($"doc_id", $"pos"), lit(buckets)).as("salt"))
     toks
       .groupBy($"word", $"salt")
       .agg(count(lit(1)).as("partial_cnt"))          // stage 1: skew spread

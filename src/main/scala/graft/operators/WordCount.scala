@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.TextFunctions
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Word-count parity pipeline — the reference's single application,
@@ -13,6 +14,10 @@ import org.apache.spark.sql.functions._
   *   4. drop empty tokens
   *   5. count per word (`wordcount.go:26-32`)
   *
+  * Steps 1-4 are one byte scan per row ([[graft.functions.WordTokens]],
+  * whose scanner [[graft.mr.WordCountMapper]] shares) instead of a regex
+  * split, a regex replace and a `lower` per token.
+  *
   * This single pipeline covers reference operators O1-O10 (SURVEY.md §2.1):
   * scan, flatMap (explode), project, filter, hash shuffle (groupBy),
   * group, per-key count, sort, sink. The shuffle is preceded by a
@@ -24,39 +29,25 @@ import org.apache.spark.sql.functions._
   */
 object WordCount {
 
-  /** Java-regex equivalent of Go `strings.Trim(w, ".,!?\"':;()")` —
-    * strips leading+trailing runs of the cutset. regexp_replace removes
-    * every match, so one pattern handles both ends. */
-  val TrimPattern = "^[.,!?\"':;()]+|[.,!?\"':;()]+$"
-
-  /** Tokenize a text column with exact reference semantics; yields one
-    * row per non-empty token. */
+  /** Tokenize a text column with exact reference semantics (steps 1-4);
+    * yields one row per non-empty token. */
   def tokenize(df: DataFrame, textCol: String): DataFrame =
-    df.select(explode(split(col(textCol), "\\s+")).as("raw"))
-      .select(lower(regexp_replace(col("raw"), TrimPattern, "")).as("word"))
-      .filter(col("word") =!= "")
+    df.select(explode(TextFunctions.wordTokens(col(textCol))).as("word"))
+
+  /** Per-word counts of a text column, in no particular order. */
+  def counts(df: DataFrame, textCol: String): DataFrame =
+    tokenize(df, textCol).groupBy("word").agg(count(lit(1)).as("cnt"))
 
   /** The flagship query: word frequencies over `documents.text`,
     * deterministically ordered. */
   def wordCount(docs: DataFrame): DataFrame =
-    tokenize(docs, "text")
-      .groupBy("word")
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy("word")
+    counts(docs, "text").orderBy("word")
 
   /** Word count over raw text files (the Gutenberg corpus path) —
     * `spark.read.text` replaces worker.go:126's whole-file read; one
     * input split per HDFS block at scale, not one task per file. */
   def wordCountText(lines: DataFrame): DataFrame =
-    wordCountCol(lines, col("value"))
-
-  private def wordCountCol(df: DataFrame, text: Column): DataFrame =
-    df.select(explode(split(text, "\\s+")).as("raw"))
-      .select(lower(regexp_replace(col("raw"), TrimPattern, "")).as("word"))
-      .filter(col("word") =!= "")
-      .groupBy("word")
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy("word")
+    counts(lines, "value").orderBy("word")
 
   /** O9: tab-separated sink (`worker.go:224-239` writes `key\tvalue`).
     * One file per partition, exactly like `mr-out-<reduceID>`. */

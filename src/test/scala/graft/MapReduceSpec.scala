@@ -1,7 +1,13 @@
 package graft
 
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.mr._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
 import org.apache.spark.sql.Row
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 
 /** Typed pluggable Mapper/Reducer surface — the heritage of the
   * reference's two UDF interfaces (types.go:8-14). */
@@ -11,6 +17,16 @@ class MapReduceSpec extends SparkSpec {
   test("WordCountMapper matches reference mapper semantics") {
     val out = WordCountMapper.map("f.txt", "The quick.. (brown) FOX!").toSeq
     assert(out == Seq("the" -> "1", "quick" -> "1", "brown" -> "1", "fox" -> "1"))
+  }
+
+  test("WordCountMapper lowercases the same under a Turkish default locale") {
+    val prev = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+      // ASCII and non-ASCII tokens take different lowercasing paths
+      val out = WordCountMapper.map("f.txt", "TITLE \u00c9TITLE").map(_._1).toSeq
+      assert(out == Seq("title", "\u00e9title"))
+    } finally java.util.Locale.setDefault(prev)
   }
 
   test("WordCountReducer empty-group contract returns \"0\" (wordcount.go:27-29)") {
@@ -63,5 +79,31 @@ class MapReduceSpec extends SparkSpec {
     // per-file golden from BASELINE.md: being_ernest 23,629 tokens / 3,348 distinct
     assert(m.size == 3348)
     assert(m.values.map(_.toLong).sum == 23629L)
+  }
+
+  test("runOnFiles counts temp-dir files exactly, one map task per file or core") {
+    val dir = Files.createTempDirectory("mr-files")
+    val paths = (0 until 8).map { i =>
+      val p = dir.resolve(s"part-$i.txt")
+      Files.writeString(p, Seq.fill(10)(s"Alpha, (beta) don't file$i.").mkString("\n"))
+      p.toString
+    }
+    val mapTasks = new AtomicInteger
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name.contains(dir.toString)))
+          mapTasks.accumulateAndGet(e.stageInfo.numTasks, (a, b) => math.max(a, b))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val m = MapReduce.runOnFiles(spark, paths, WordCountMapper, WordCountReducer)
+        .collect().map { case Row(k: String, v: String) => k -> v.toLong }.toMap
+      assert(m == Map("alpha" -> 80L, "beta" -> 80L, "don't" -> 80L) ++
+        (0 until 8).map(i => s"file$i" -> 10L))
+      val want = math.min(8, spark.sparkContext.defaultParallelism)
+      eventually(timeout(Span(10, Seconds))) {
+        assert(mapTasks.get >= want, s"map stage ran ${mapTasks.get} tasks, want >= $want")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

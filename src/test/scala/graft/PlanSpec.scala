@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.{Relational, WordCount}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.{col, lower}
 
 /** Plan-shape assertions: the properties that matter at 100 TB must be
@@ -30,6 +32,19 @@ class PlanSpec extends SparkSpec {
   test("word count plans a map-side partial aggregate before the shuffle") {
     val p = plan(WordCount.wordCount(Tables.documents(spark, sfDir)))
     assert(p.contains("partial_count"), p)
+  }
+
+  test("WordCountMain plans no global sort: no RangePartitioning exchange") {
+    // the bucket shuffle discards any global order; each bucket is
+    // sorted on its own, so a range shuffle here is pure cost
+    val in = java.nio.file.Files.createTempDirectory("wcmain-plan")
+    java.nio.file.Files.writeString(in.resolve("input.txt"), "b a b\n")
+    val df = WordCountMain.buckets(spark, Seq(s"$in/input.txt"), 3)
+    val parts = flattenPlan(df.queryExecution.executedPlan).collect {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }
+    assert(parts.nonEmpty, df.queryExecution.executedPlan)
+    assert(!parts.exists(_.isInstanceOf[RangePartitioning]), parts)
   }
 
   test("global top-k compiles to TakeOrderedAndProject (no full sort)") {

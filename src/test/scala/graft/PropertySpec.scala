@@ -1,6 +1,7 @@
 package graft
 
-import graft.functions.HashFunctions
+import graft.functions.{HashFunctions, TextFunctions}
+import graft.mr.WordCountMapper
 import graft.operators.{Dedup, WordCount}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
@@ -44,6 +45,48 @@ class PropertySpec extends SparkSpec {
         assert(t == t.toLowerCase)
         assert(!cutset.contains(t.head) && !cutset.contains(t.last), t)
       }
+    }
+  }
+
+  test("word tokens kernel ≡ mapper ≡ independent reference ≡ the regex composition") {
+    // the six `\s` bytes; U+00A0, U+2003 and the line terminators
+    // U+0085, U+2028, U+2029, which are not separators under that
+    // contract; cutset runs, inner apostrophes and non-ASCII case
+    val piece: Gen[String] = Gen.oneOf(
+      " ", "\t", "\n", "\u000b", "\f", "\r", "\u00a0", "\u2003", "\u0085", "\u2028", "\u2029",
+      ".", ",", "!", "?", "\"", "'", ":", ";", "(", ")", "..!?", "don't", "O'Neil",
+      "a", "Word", "TITLE", "\u0130", "\u03a3", "\u039f\u0394\u039f\u03a3", "\u1e9e", "\u01c5", "\u00e9")
+    import org.apache.spark.sql.functions.{filter, lower, regexp_replace, split, transform}
+    val texts = samples(Gen.chooseNum(0, 12).flatMap(n => Gen.listOfN(n, piece)).map(_.mkString), 400)
+    // Go strings.Fields + strings.Trim + lowercase over Java strings;
+    // ICU lowercasing because java.lang.String places the final sigma
+    // differently next to a '"' than Spark's `lower` does
+    def reference(t: String): Seq[String] = {
+      def isCut(c: Char) = ".,!?\"':;()".indexOf(c) >= 0
+      t.split("[ \\t\\n\\x0B\\f\\r]").toSeq
+        .map(_.dropWhile(isCut).reverse.dropWhile(isCut).reverse)
+        .filter(_.nonEmpty)
+        .map(w => com.ibm.icu.lang.UCharacter.toLowerCase(com.ibm.icu.util.ULocale.ROOT, w))
+    }
+    val rows = (texts.map(Option(_)) ++ Seq(Some(""), None)).zipWithIndex
+    val df = rows.map { case (t, i) => (i, t.orNull) }.toDF("i", "text")
+    val trim = "^[.,!?\"':;()]+|[.,!?\"':;()]+$"
+    val got = df.select($"i", TextFunctions.wordTokens($"text"),
+        filter(transform(split($"text", "\\s+"), w => lower(regexp_replace(w, trim, ""))),
+          w => w =!= ""))
+      .collect().map(r => r.getInt(0) -> (Option(r.getSeq[String](1)), Option(r.getSeq[String](2))))
+      .toMap
+    rows.foreach { case (t, i) =>
+      val (kernel, regex) = got(i)
+      assert(kernel == t.map(reference), s"kernel vs reference on row $i")
+      t.foreach { text =>
+        assert(WordCountMapper.map("t", text).map(_._1).toSeq == reference(text),
+          s"mapper vs reference on row $i")
+        // Java's `$` also matches before a final line terminator
+        if (!text.exists("\u0085\u2028\u2029".contains(_)))
+          assert(kernel == regex, s"kernel vs regex composition on row $i")
+      }
+      if (t.isEmpty) assert(kernel.isEmpty && regex.isEmpty)
     }
   }
 

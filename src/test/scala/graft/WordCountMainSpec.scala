@@ -28,4 +28,21 @@ class WordCountMainSpec extends SparkSpec {
       assert(b == expected, s"$w routed to $b, reference says $expected")
     }
   }
+
+  test("a reused session keeps its confs") {
+    val in = java.nio.file.Files.createTempDirectory("wcmain-conf")
+    java.nio.file.Files.writeString(in.resolve("input.txt"), "a b a\n")
+    // a value main never picks for a session it builds (max(nReduce, 8))
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try {
+      val before = spark.conf.getAll
+      WordCountMain.main(Array(s"$in/input.txt", s"$in/out", "3"))
+      val after = spark.conf.getAll
+      val drifted = (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k))
+      assert(drifted.isEmpty,
+        drifted.map(k => s"$k: ${before.get(k)} -> ${after.get(k)}").mkString("; "))
+    } finally spark.conf.set(key, prev)
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.mr.WordCountMapper
 import graft.operators.WordCount
 import org.apache.spark.sql.Row
 
@@ -21,6 +22,16 @@ class WordCountSpec extends SparkSpec {
     val df = Seq("""..Hello!! (world) it's ''quoted'' ?!?. x""").toDF("text")
     val toks = WordCount.tokenize(df, "text").as[String].collect()
     assert(toks.toSeq == Seq("hello", "world", "it's", "quoted", "x"))
+  }
+
+  test("trim keeps the cutset before a trailing U+0085/U+2028/U+2029, on both paths") {
+    // Go strings.Trim and the oracle's RE2 `$` keep the '.'; Java's `$`
+    // matches before a final line terminator, so the regex tokenizer
+    // used to give "end\u2028"
+    val cases = Seq("\u0085", "\u2028", "\u2029").map(t => s"end.$t")
+    val toks = WordCount.tokenize(cases.toDF("text"), "text").as[String].collect()
+    assert(toks.toSeq == cases)
+    cases.foreach(c => assert(WordCountMapper.map("f.txt", c).map(_._1).toSeq == Seq(c)))
   }
 
   test("inline e2e corpus golden: hello=3 world=2 test=2") {
